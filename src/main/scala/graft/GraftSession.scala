@@ -11,12 +11,9 @@ import org.apache.spark.sql.SparkSession
   *
   * On a cluster, pass the master/deploy config as usual and keep the rest;
   * shuffle partitions and the broadcast threshold are the knobs to re-size
-  * (see SCALE.md). Graph-engine knobs (both optional):
-  * `graft.graph.pregelPartitions` (GraphX view partition count — default 8
-  * locally, set ~2-3× executor cores on a cluster) and
-  * `graft.graph.broadcastLabels` (default true; set false when the vertex
-  * label map outgrows broadcast — label propagation then shuffles the
-  * label side instead). */
+  * (see SCALE.md). The broadcast threshold also decides whether the graph
+  * engine broadcasts vertex-sized loop frames (label propagation's label
+  * map, k-core's survivor set): it does while |V| × 48 B fits under it. */
 object GraftSession {
   def builder(master: String = "local[*]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =

@@ -1,9 +1,11 @@
 package graft.graph
 
 import org.apache.spark.graphx.{Edge, EdgeDirection, Graph, Pregel, lib}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 
 /** Property-graph surface re-expressed Spark-first (SURVEY.md §2.10, §3.3).
   *
@@ -66,12 +68,28 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     if (thr > 0 && numVertices * rowBytes <= thr) broadcast(df) else df
   }
 
-  /** Partition count for GraphX RDD views. Pregel pays per-partition
-    * scheduling every superstep, so fewer/fatter partitions win at local
-    * scale (measured: 8 beats 32 on local[32]); a cluster deployment sets
-    * `graft.graph.pregelPartitions` ≈ total executor cores instead. */
-  private def pregelParts: Int =
-    spark.conf.getOption("graft.graph.pregelPartitions").map(_.toInt).getOrElse(8)
+  /** Release actions of the cached artifacts built on this instance — the
+    * one record of what it holds: [[stored]] appends, [[uncache]] drains. */
+  private val releases = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]
+
+  /** Register a just-built cached artifact with [[uncache]]; `release`
+    * frees it without blocking. */
+  private def stored[A](artifact: A)(release: A => Unit): A = {
+    releases.add(() => release(artifact))
+    artifact
+  }
+
+  /** Every GraphX graph this instance builds: both sides coalesced to 8
+    * partitions (Pregel pays per-partition scheduling every superstep, so
+    * fewer/fatter partitions win at local scale — measured: 8 beats 32 on
+    * local[32]) and stored MEMORY_AND_DISK so large graphs spill instead of
+    * OOM. (EdgePartition2D was measured: it slows CC ~35% at this scale —
+    * the repartition outweighs the message savings.) */
+  private def graphX[VD: ClassTag, ED: ClassTag](vs: RDD[(Long, VD)],
+      es: RDD[Edge[ED]], default: VD): Graph[VD, ED] =
+    Graph(vs.coalesce(8), es.coalesce(8), default,
+      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
+      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
 
   // ---- Batch mutation surface (Blueprints addVertex / addEdge /
   // removeVertex / property set, re-expressed as dataflow): every op
@@ -585,11 +603,11 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * used. Long-lived sessions that construct throwaway instances (e.g.
     * `g.visible.triangleCounts` per query, instead of the memoized
     * GraphFixture graph) should call [[uncache]] when done with one. */
-  lazy val undirectedEdges: DataFrame = edges
+  lazy val undirectedEdges: DataFrame = stored(edges
     .filter(col("src") =!= col("dst"))
     .select(least(col("src"), col("dst")).as("a"),
       greatest(col("src"), col("dst")).as("b")).distinct()
-    .persist()
+    .persist())(_.unpersist(false))
 
   /** Degree-ordered oriented adjacency — the stored INDEX for triangle /
     * wedge workloads: each undirected edge oriented from its lower-(degree,
@@ -601,35 +619,50 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * other session artifacts; at 100 TB this is a materialized table
     * bucketed by `u`. */
   lazy val orientedEdges: DataFrame = {
-    val und = undirectedEdges
-    val deg = undDegrees // stored index: joined twice below, reused by kCore
-    val withDeg = und
-      .join(deg.select(col("id").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("id").as("b"), col("d").as("db")), "b")
-    val aFirst = col("da") < col("db") ||
-      (col("da") === col("db") && col("a") < col("b"))
-    val ori = withDeg.select(
-      when(aFirst, col("a")).otherwise(col("b")).as("u"),
-      when(aFirst, col("b")).otherwise(col("a")).as("v"),
-      when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-      .persist()
+    val ori = stored(orient(undirectedEdges).persist())(_.unpersist(false))
     ori.count() // materialize while the degree index is hot
-    oriBuilt = true
     ori
   }
-  @volatile private var oriBuilt = false
 
   /** Undirected simple-graph degrees — vertex-sized stored index shared by
     * the oriented-adjacency build (two joins) and k-core's first peel round
     * (which is exactly a filter over it). */
   lazy val undDegrees: DataFrame = {
-    degBuilt = true
     val und = undirectedEdges
-    und.select(col("a").as("id")).unionAll(und.select(col("b").as("id")))
+    stored(und.select(col("a").as("id")).unionAll(und.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
-      .persist()
+      .persist())(_.unpersist(false))
   }
-  @volatile private var degBuilt = false
+
+  /** Orient each simple pair (a, b) from its lower-(degree, id) endpoint `u`
+    * to the higher `v`, carrying v's degree `dv` — degrees from the stored
+    * [[undDegrees]] index (two joins), the total order every wedge
+    * enumeration here shares. */
+  private def orient(pairs: DataFrame): DataFrame = {
+    val deg = undDegrees
+    val withDeg = pairs
+      .join(deg.select(col("id").as("a"), col("d").as("da")), "a")
+      .join(deg.select(col("id").as("b"), col("d").as("db")), "b")
+    val aFirst = col("da") < col("db") ||
+      (col("da") === col("db") && col("a") < col("b"))
+    withDeg.select(
+      when(aFirst, col("a")).otherwise(col("b")).as("u"),
+      when(aFirst, col("b")).otherwise(col("a")).as("v"),
+      when(aFirst, col("db")).otherwise(col("da")).as("dv"))
+  }
+
+  /** Fork wedges (u; p, q) of an oriented edge list `ori` (u, v, dv): every
+    * pair of u's out-neighbors, each unordered pair once, p before q in the
+    * same (degree, id) order — so a closing edge can only be p → q.
+    * `lowLeg` restricts the p leg (columns u, p, dp) before the join. */
+  private def forks(ori: DataFrame,
+      lowLeg: DataFrame => DataFrame = identity): DataFrame = {
+    val l = lowLeg(ori.select(col("u"), col("v").as("p"), col("dv").as("dp")))
+    val r = ori.select(col("u"), col("v").as("q"), col("dv").as("dq"))
+    val pFirst = col("dp") < col("dq") ||
+      (col("dp") === col("dq") && col("p") < col("q"))
+    l.join(r, "u").filter(pFirst).select(col("u"), col("p"), col("q"))
+  }
 
   /** Undirected MULTI-edge adjacency hash-clustered on the receiving vertex
     * `a` — the stored message-passing index: HashPartitioning(a) satisfies
@@ -643,13 +676,11 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * bucketed by `a`. */
   lazy val undByA: DataFrame = {
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    undBuilt = true
-    edges.select(col("src").as("a"), col("dst").as("b"))
+    stored(edges.select(col("src").as("a"), col("dst").as("b"))
       .unionAll(edges.select(col("dst").as("a"), col("src").as("b")))
       .repartition(parts, col("a"))
-      .persist()
+      .persist())(_.unpersist(false))
   }
-  @volatile private var undBuilt = false
 
   /** Per-list shard cap for [[neighborLists]]: no stored adjacency row
     * holds more than this many neighbor ids, whatever the hub degree.
@@ -674,11 +705,10 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * and sharded by rank — the standard hub-cap layout. */
   lazy val neighborLists: DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    nbrBuilt = true
     val cap = nbrShardCap
     val byRank = Window.partitionBy("a").orderBy("b")
     val byVertex = Window.partitionBy("a")
-    undByA.filter(col("a") =!= col("b"))
+    stored(undByA.filter(col("a") =!= col("b"))
       .select("a", "b").dropDuplicates("a", "b")
       .withColumn("rn", row_number().over(byRank))
       .withColumn("deg", count(lit(1)).over(byVertex))
@@ -686,42 +716,30 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
         ((col("rn") - 1) / cap).cast("int").as("shard"))
       .agg(first(col("deg")).as("deg"),
         sort_array(collect_list(col("b"))).as("nbrs"))
-      .persist()
+      .persist())(_.unpersist(false))
   }
-  @volatile private var nbrBuilt = false
 
-  /** Release this instance's cached artifacts ([[undirectedEdges]] and
-    * [[orientedEdges]]; the GraphX view's RDD caches are dropped by GC once
-    * unreferenced). Safe whether or not an artifact was ever computed —
-    * unpersisting the registered-but-unmaterialized undirected view is a
-    * cheap catalog removal, and the oriented index (whose build is eager)
-    * is only touched if it was actually built. */
+  /** Release, without blocking, every cached artifact built on this
+    * instance so far: the stored indexes, the GraphX view, the CC/SCC
+    * labelings with the GraphX graphs they are read from, and the
+    * [[storedBaseCC]] memo. The instance stays usable — a released
+    * DataFrame recomputes from lineage, a later [[storedBaseCC]] call
+    * rebuilds — but a labeling [[storedBaseCC]] returned before must not be
+    * read after (its checkpoint blocks are gone). */
   def uncache(): Unit = {
-    undirectedEdges.unpersist()
-    if (oriBuilt) { orientedEdges.unpersist(); () }
-    if (degBuilt) { undDegrees.unpersist(); () }
-    if (undBuilt) { undByA.unpersist(); () }
-    if (nbrBuilt) { neighborLists.unpersist(); () }
-    if (ccBuilt) { connectedComponents.unpersist(); () }
-    if (sccBuilt) { stronglyConnectedComponents.unpersist(); () }
-    ()
+    var release = releases.poll()
+    while (release != null) { release(); release = releases.poll() }
   }
 
   /** GraphX view: vertex attr = val (nulls → 0.0), unit edge attr.
-    * MEMORY_AND_DISK so 100 TB-scale graphs spill instead of OOM.
     * Built once per PropertyGraph instance (GraphX's internal routing-table
-    * build is the expensive part; CC and Pregel reuse it). */
-  lazy val toGraphX: Graph[Double, Long] = {
-    val vrdd = vertices.select(col("id"), coalesce(col("val"), lit(0.0))).rdd
-      .map(r => (r.getLong(0), r.getDouble(1))).coalesce(pregelParts)
-    val erdd = edges.select("src", "dst").rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), 1L)).coalesce(pregelParts)
-    Graph(vrdd, erdd, 0.0,
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-    // (EdgePartition2D was measured: it slows CC ~35% at this scale — the
-    // repartition outweighs the message savings. Revisit on a real cluster.)
-  }
+    * build is the expensive part; CC and Pregel reuse it) and released by
+    * [[uncache]]. */
+  lazy val toGraphX: Graph[Double, Long] = stored(graphX(
+    vertices.select(col("id"), coalesce(col("val"), lit(0.0))).rdd
+      .map(r => (r.getLong(0), r.getDouble(1))),
+    edges.select("src", "dst").rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1L)),
+    0.0))(_.unpersist(blocking = false))
 
   /** Connected components (GraphX Pregel, undirected min-id propagation).
     * Integer min is order-independent ⇒ deterministic, recursive-CTE
@@ -730,11 +748,10 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * reuse it instead of re-running a second full-graph fixed point. */
   lazy val connectedComponents: DataFrame = {
     val sp = spark; import sp.implicits._
-    ccBuilt = true
-    toGraphX.connectedComponents().vertices.toDF("id", "component")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val cc = stored(toGraphX.connectedComponents())(_.unpersist(blocking = false))
+    stored(cc.vertices.toDF("id", "component")
+      .persist(StorageLevel.MEMORY_AND_DISK))(_.unpersist(false))
   }
-  @volatile private var ccBuilt = false
 
   /** Directed strongly-connected components: each vertex labeled with the
     * LOWEST vertex id in its SCC. Deterministic: labels are integer
@@ -775,7 +792,6 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * of re-running the peel. */
   lazy val stronglyConnectedComponents: DataFrame = {
     val sp = spark; import sp.implicits._
-    sccBuilt = true
     var e = graft.util.cut(
       edges.select("src", "dst").filter(col("src") =!= col("dst")).distinct())
     var n = e.count()
@@ -797,28 +813,27 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       if (n == 0) spark.emptyDataFrame.select(
         lit(0L).as("id"), lit(0L).as("core_component")).limit(0)
       else {
-        val vrdd = e.select(col("src").as("id")).unionAll(e.select("dst"))
-          .distinct().rdd.map(r => (r.getLong(0), 0.0)).coalesce(pregelParts)
         // re-SELECT before positional access: the using-column semi-joins
         // in the peel reorder e's schema to (dst, src) — join keys come
         // first — and a positional map would hand GraphX the TRANSPOSE
         // (label-invariant for SCC min-ids, but silently wrong for any
         // direction-sensitive future use)
-        val erdd = e.select("src", "dst").rdd
-          .map(r => Edge(r.getLong(0), r.getLong(1), 1L))
-          .coalesce(pregelParts)
-        val core = Graph(vrdd, erdd, 0.0,
-          edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-          vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-        lib.StronglyConnectedComponents.run(core, numIter = 8)
-          .vertices.toDF("id", "core_component")
+        val core = graphX(
+          e.select(col("src").as("id")).unionAll(e.select("dst"))
+            .distinct().rdd.map(r => (r.getLong(0), 0.0)),
+          e.select("src", "dst").rdd
+            .map(r => Edge(r.getLong(0), r.getLong(1), 1L)),
+          0.0)
+        val scc = stored(lib.StronglyConnectedComponents.run(core, numIter = 8)) {
+          s => s.unpersist(blocking = false); core.unpersist(blocking = false)
+        }
+        scc.vertices.toDF("id", "core_component")
       }
-    vertices.select("id").join(coreLbl, Seq("id"), "left")
+    stored(vertices.select("id").join(coreLbl, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("core_component"), col("id")).as("component"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK))(_.unpersist(false))
   }
-  @volatile private var sccBuilt = false
 
   /** INCREMENTAL connected-components maintenance: treat the edges matching
     * `deltaPred` as a freshly-ingested batch and fold them into the stored
@@ -853,7 +868,10 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       val base = PropertyGraph(vertices, edges.filter(!deltaPred))
       val cc = graft.util.cut(base.connectedComponents)
       base.uncache()
-      cc
+      stored(cc) { c =>
+        baseCCMemo.remove(deltaPred.toString)
+        org.apache.spark.sql.GraftBridge.dropCut(c)
+      }
     })
 
   /** Fold ONE batch of delta edges (`src`, `dst` columns) into labeling
@@ -1038,16 +1056,14 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     val sp = spark; import sp.implicits._
     val srcIds = vertices.filter(sourcePred).select("id").rdd
       .map(_.getLong(0)).collect().toSet // metadata-scale source set
-    val vrdd = vertices.select("id").rdd.map(r => {
-      val id = r.getLong(0)
-      (id, if (srcIds.contains(id)) 0.0 else Double.PositiveInfinity)
-    }).coalesce(pregelParts)
-    val erdd = edges.select(col("src"), col("dst"),
-      coalesce(col("weight"), lit(1.0))).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2))).coalesce(pregelParts)
-    val g = Graph(vrdd, erdd, Double.PositiveInfinity,
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
+    val g = graphX(
+      vertices.select("id").rdd.map(r => {
+        val id = r.getLong(0)
+        (id, if (srcIds.contains(id)) 0.0 else Double.PositiveInfinity)
+      }),
+      edges.select(col("src"), col("dst"), coalesce(col("weight"), lit(1.0))).rdd
+        .map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2))),
+      Double.PositiveInfinity)
     val res = Pregel(g, Double.PositiveInfinity,
       activeDirection = EdgeDirection.Out)(
       (_, attr, msg) => math.min(attr, msg),
@@ -1082,7 +1098,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * Dangling mass is dropped (simplified uniform-teleport formulation) —
     * same formula in the DuckDB oracle (GraphSql.pageRankSql). */
   def pageRank(iters: Int): DataFrame = {
-    val n = vertices.count().toDouble // metadata-scale driver value, not data
+    val n = numVertices.toDouble // metadata-scale driver value, not data
     val odeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val ids = vertices.select("id")
     var pr = ids.withColumn("pr", lit(1.0) / lit(n))
@@ -1268,17 +1284,12 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     // exist), is exact by the argument above, and costs one vertex-scale
     // distinct + a semi join against the edge-scale leg.
     val srcs = ori.select(col("u").as("p")).distinct()
-    val l = ori.select(col("u"), col("v").as("p"), col("dv").as("dp"))
-      .join(srcs, Seq("p"), "left_semi")
-    val r = ori.select(col("u"), col("v").as("q"), col("dv").as("dq"))
-    val vFirst = col("dp") < col("dq") ||
-      (col("dp") === col("dq") && col("p") < col("q"))
-    val forks = l.join(r, "u").filter(vFirst) // each unordered pair once
+    val wedges = forks(ori, _.join(srcs, Seq("p"), "left_semi"))
       .select(col("u"), col("p").as("x"), col("q").as("z"))
     val close = ori.select(col("u").as("x"), col("v").as("z"))
     // Credit all three corners in ONE pass over the triangle stream —
     // a 3-way union of selects would re-execute the fork join per branch.
-    forks.join(close, Seq("x", "z"))
+    wedges.join(close, Seq("x", "z"))
       .select(explode(array(col("u"), col("x"), col("z"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("n_tri"))
       .localCheckpoint()
@@ -1297,9 +1308,9 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     // round's plan nests every previous round's relation and driver-side
     // re-planning grows superlinearly (measured: rounds 1-3 ≈ 2.5 s, round
     // 4 ≈ 9 s, final materialize ≈ 5.5 s). The checkpointed survivor set
-    // loses size stats, so the semi-joins carry an explicit broadcast hint
-    // — the survivor set is vertex-sized (a cluster deployment whose
-    // survivors outgrow broadcast drops the hint and takes the shuffle).
+    // loses size stats, so the semi-joins carry the size-aware [[vhint]]
+    // — the survivor set is vertex-sized (where survivors outgrow
+    // broadcast the hint drops and the joins take the shuffle).
     // Round 1 needs no restriction (the live set still contains every
     // endpoint): it is a filter over the stored [[undDegrees]] index.
     // r16: cuts are LAZY — cut() truncates the PLAN immediately either
@@ -1322,8 +1333,8 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   private[graft] def kCoreRound(live: DataFrame, k: Int): DataFrame = {
     val keep = live.select("id")
     val e = undirectedEdges
-      .join(broadcast(keep.withColumnRenamed("id", "a")), Seq("a"), "left_semi")
-      .join(broadcast(keep.select(col("id").as("b"))), Seq("b"), "left_semi")
+      .join(vhint(keep.withColumnRenamed("id", "a")), Seq("a"), "left_semi")
+      .join(vhint(keep.select(col("id").as("b"))), Seq("b"), "left_semi")
     e.select(col("a").as("id")).unionAll(e.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= k)
@@ -1393,23 +1404,8 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * ~1×. Exposed package-private so PlanQualitySpec can pin the round's
     * join shape. */
   private[graft] def trussSupport(t: DataFrame): DataFrame = {
-    val deg = undDegrees // STATIC initial degrees, same order as orientedEdges
-    val withDeg = t
-      .join(deg.select(col("id").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("id").as("b"), col("d").as("db")), "b")
-    val aFirst = col("da") < col("db") ||
-      (col("da") === col("db") && col("a") < col("b"))
-    val ori = withDeg.select(
-      when(aFirst, col("a")).otherwise(col("b")).as("u"),
-      when(aFirst, col("b")).otherwise(col("a")).as("v"),
-      when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-    val l = ori.select(col("u"), col("v").as("p"), col("dv").as("dp"))
-    val r = ori.select(col("u"), col("v").as("q"), col("dv").as("dq"))
-    val vFirst = col("dp") < col("dq") ||
-      (col("dp") === col("dq") && col("p") < col("q"))
-    val forks = l.join(r, "u").filter(vFirst) // each unordered pair once
-      .select(col("p"), col("q"), col("u"))
-    val tri = forks.join(ori.select(col("u").as("p"), col("v").as("q")),
+    val ori = orient(t) // STATIC initial degrees, same order as orientedEdges
+    val tri = forks(ori).join(ori.select(col("u").as("p"), col("v").as("q")),
       Seq("p", "q"))
     // credit all three edges of each triangle in ONE pass over the
     // stream, back in the canonical value order `t` keys by
@@ -1524,22 +1520,18 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     // LogicalRDD reports UnknownPartitioning (verified round 2 — both
     // groupBys grew real Exchanges and the query doubled in time), while
     // InMemoryRelation preserves the repartition's HashPartitioning.
-    val sp = spark
     val und = undByA
-    // The label map is vertex-sized; broadcast it so the edge side never
-    // moves and the join preserves und's partitioning (checkpointed
-    // generations are LogicalRDDs with unknown stats, so WITHOUT the hint
-    // the planner assumes huge and sort-merge-joins — shuffling the edge
-    // list AND losing the partitioning, measured ~1.5× the whole query).
-    // At cluster scale where the vertex map outgrows broadcast, set
-    // graft.graph.broadcastLabels=false: label side shuffles (vertex-sized
-    // — the cheap side), edges still never move.
-    val bcastLabels =
-      sp.conf.getOption("graft.graph.broadcastLabels").forall(_.toBoolean)
-    def hint(df: DataFrame): DataFrame = if (bcastLabels) broadcast(df) else df
+    // The label map is vertex-sized; broadcast it (size-aware [[vhint]]) so
+    // the edge side never moves and the join preserves und's partitioning
+    // (checkpointed generations are LogicalRDDs with unknown stats, so
+    // WITHOUT the hint the planner assumes huge and sort-merge-joins —
+    // shuffling the edge list AND losing the partitioning, measured ~1.5×
+    // the whole query). Where the vertex map outgrows broadcast the hint
+    // drops: the label side shuffles (vertex-sized — the cheap side), edges
+    // still never move.
     var lbl = vertices.select(col("id"), col("id").as("lbl"))
     for (_ <- 1 to iters) {
-      val pick = und.join(hint(lbl.select(col("id").as("b"), col("lbl").as("l"))), "b")
+      val pick = und.join(vhint(lbl.select(col("id").as("b"), col("lbl").as("l"))), "b")
         .groupBy(col("a").as("id"), col("l")).agg(count(lit(1)).as("n"))
         .groupBy("id").agg(max(struct(col("n"), (-col("l")).as("negl"))).as("m"))
         .select(col("id"), (-col("m.negl")).as("l"))

@@ -1049,6 +1049,33 @@ object Traversal {
     parts.map(_.trim).filter(_.nonEmpty).toList
   }
 
+  /** The steps that extend a traversal one hop or filter it in place —
+    * shared by the outer chain ([[parse]]) and branch bodies
+    * ([[branchFn]]), so both accept exactly the same forms. */
+  private val extendStep: PartialFunction[(String, String), Traversal => Traversal] = {
+    case ("out", "")  => _.out()
+    case ("in", "")   => _.in()
+    case ("both", "") => _.both()
+    case ("out", EdgePred(l, p))  => _.out(l, p)
+    case ("in", EdgePred(l, p))   => _.in(l, p)
+    case ("both", EdgePred(l, p)) => _.both(l, p)
+    case ("out", a)  => _.out(label(a))
+    case ("in", a)   => _.in(label(a))
+    case ("both", a) => _.both(label(a))
+    case ("outE", "")  => _.outE()
+    case ("inE", "")   => _.inE()
+    case ("bothE", "") => _.bothE()
+    case ("outE", a)  => _.outE(label(a))
+    case ("inE", a)   => _.inE(label(a))
+    case ("bothE", a) => _.bothE(label(a))
+    case ("inV", "")    => _.inV()
+    case ("outV", "")   => _.outV()
+    case ("otherV", "") => _.otherV()
+    case ("has", a)  => _.has(pred(a))
+    case ("simplePath", "") => _.simplePath()
+    case ("dedup", "")      => _.dedup()
+  }
+
   /** Compile a branch chain (`out('by').has(val>9000)`…) into the
     * traversal function the fluent branch steps take. Branch bodies are
     * the traversal-EXTENDING subset — terminals and further branching
@@ -1061,27 +1088,7 @@ object Traversal {
       matched.replaceAll("\\s", "") == chain.trim.replaceAll("\\s", ""),
       s"bad branch chain: $chain")
     steps.foldLeft(t0) {
-      case (t, ("out", ""))  => t.out()
-      case (t, ("in", ""))   => t.in()
-      case (t, ("both", "")) => t.both()
-      case (t, ("out", EdgePred(l, p)))  => t.out(l, p)
-      case (t, ("in", EdgePred(l, p)))   => t.in(l, p)
-      case (t, ("both", EdgePred(l, p))) => t.both(l, p)
-      case (t, ("out", a))  => t.out(label(a))
-      case (t, ("in", a))   => t.in(label(a))
-      case (t, ("both", a)) => t.both(label(a))
-      case (t, ("outE", ""))  => t.outE()
-      case (t, ("inE", ""))   => t.inE()
-      case (t, ("bothE", "")) => t.bothE()
-      case (t, ("outE", a))  => t.outE(label(a))
-      case (t, ("inE", a))   => t.inE(label(a))
-      case (t, ("bothE", a)) => t.bothE(label(a))
-      case (t, ("inV", ""))    => t.inV()
-      case (t, ("outV", ""))   => t.outV()
-      case (t, ("otherV", "")) => t.otherV()
-      case (t, ("has", a))  => t.has(pred(a))
-      case (t, ("simplePath", "")) => t.simplePath()
-      case (t, ("dedup", ""))      => t.dedup()
+      case (t, st) if extendStep.isDefinedAt(st) => extendStep(st)(t)
       // where() against a label set OUTSIDE the branch (the parent chain's
       // as() positions stay valid inside union/choose/coalesce branches).
       // Inside a path-erasing fold body the label map is empty and
@@ -1220,28 +1227,9 @@ object Traversal {
     @annotation.tailrec
     def loop(rest: List[(String, String)]): Unit = rest match {
       case Nil => ()
-      case ("out", "") :: tl  => t = t.out(); loop(tl)
-      case ("in", "") :: tl   => t = t.in(); loop(tl)
-      case ("both", "") :: tl => t = t.both(); loop(tl)
-      case ("out", EdgePred(l, p)) :: tl  => t = t.out(l, p); loop(tl)
-      case ("in", EdgePred(l, p)) :: tl   => t = t.in(l, p); loop(tl)
-      case ("both", EdgePred(l, p)) :: tl => t = t.both(l, p); loop(tl)
-      case ("out", a) :: tl  => t = t.out(label(a)); loop(tl)
-      case ("in", a) :: tl   => t = t.in(label(a)); loop(tl)
-      case ("both", a) :: tl => t = t.both(label(a)); loop(tl)
-      case ("outE", "") :: tl  => t = t.outE(); loop(tl)
-      case ("inE", "") :: tl   => t = t.inE(); loop(tl)
-      case ("bothE", "") :: tl => t = t.bothE(); loop(tl)
-      case ("outE", a) :: tl  => t = t.outE(label(a)); loop(tl)
-      case ("inE", a) :: tl   => t = t.inE(label(a)); loop(tl)
-      case ("bothE", a) :: tl => t = t.bothE(label(a)); loop(tl)
-      case ("inV", "") :: tl    => t = t.inV(); loop(tl)
-      case ("outV", "") :: tl   => t = t.outV(); loop(tl)
-      case ("otherV", "") :: tl => t = t.otherV(); loop(tl)
-      case ("has", a) :: tl  => t = t.has(pred(a)); loop(tl)
-      case ("simplePath", "") :: tl => t = t.simplePath(); loop(tl)
+      case st :: tl if extendStep.isDefinedAt(st) =>
+        t = extendStep(st)(t); loop(tl)
       case ("cyclicPath", "") :: tl => t = t.cyclicPath(); loop(tl)
-      case ("dedup", "") :: tl      => t = t.dedup(); loop(tl)
       case ("sample", n) :: tl if n.matches("\\d+") =>
         t = t.sample(n.toInt); loop(tl)
       case ("coin", n) :: tl if n.matches("\\d+") =>

@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.storage.StorageLevel
 
 /** Bridge into the one private[sql] entry point a planner extension needs:
   * turning a custom LogicalPlan into a DataFrame. Standard technique for
@@ -28,5 +30,19 @@ object GraftBridge {
     val plan = execution.LogicalRDD(qe.analyzed.output, qe.toRdd)(
       ck.sparkSession)
     classic.Dataset.ofRows(ck.sparkSession, plan)
+  }
+
+  /** Free, without blocking, the local-checkpoint blocks behind a
+    * [[statlessCut]] frame — its only copy, so it must not be read after. */
+  def dropCut(df: DataFrame): Unit = {
+    def persisted(r: RDD[_]): Seq[RDD[_]] =
+      if (r.getStorageLevel != StorageLevel.NONE) Seq(r)
+      else r.dependencies.flatMap(d => persisted(d.rdd))
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
+      .collectLeaves().foreach {
+        case l: execution.LogicalRDD =>
+          persisted(l.rdd).foreach(_.unpersist(blocking = false))
+        case _ =>
+      }
   }
 }
